@@ -218,15 +218,9 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("scratch/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // always in-process: the generator writes local files
+    val cpus = SessionEnv.cpus
+    val spark = SessionEnv.builder(cpus, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     write(spark, src, out, factor)
     scaled(spark, src, factor).keys.toSeq.sorted.foreach { name =>

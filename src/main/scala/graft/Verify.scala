@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,18 +7,9 @@ object Verify {
     // Driver contract: exactly (sfDir, outDir). Extra args are a
     // dev-only query-name filter for fast single-query iteration.
     val Array(sfDir, outDir, only @ _*) = args: @unchecked
-    // Default to every core; SPARK_GRAFT_CPUS overrides for experiments.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_MASTER overrides the default local[cpus] — see
-    // SessionEnv for the local-cluster (multi-JVM) wiring; shuffle
-    // partitions stay at the session's thread/core count either way.
-    val spark = SessionEnv.builder(cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[SPARK_GRAFT_CPUS] (default every core) or SPARK_GRAFT_MASTER;
+    // see SessionEnv for the local-cluster (multi-JVM) wiring.
+    val spark = SessionEnv.builder(SessionEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val retried = scala.collection.mutable.ArrayBuffer[String]()

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites (one per suite, lazy).
+/** Shared local SparkSession for test suites (one per suite, lazy),
+  * built by SessionEnv like every entry point's — so the suites run the
+  * bench's session settings (codegen cache bound included) on their
+  * own master and 4 shuffle partitions.
   *
   * SPARK_GRAFT_TEST_MASTER overrides the default local[4] — set it to
   * local-cluster[n,cores,mem] (with SPARK_HOME and SPARK_SCALA_VERSION
@@ -18,22 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * falsify.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_TEST_MASTER", "local[4]")
-    val b0 = SparkSession.builder().master(master)
-    val b =
-      if (master.startsWith("local-cluster"))
-        b0.config("spark.executor.extraClassPath",
-          Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
-            .map(new java.io.File(_).getAbsolutePath).mkString(":"))
-      else b0
-    b.appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession =
+    SessionEnv.builder("4", sys.env.getOrElse("SPARK_GRAFT_TEST_MASTER", "local[4]"),
+      Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
+        .map(new java.io.File(_).getAbsolutePath))
+      .appName(getClass.getSimpleName)
       .getOrCreate()
-  }
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 
