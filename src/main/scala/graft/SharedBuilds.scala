@@ -11,14 +11,18 @@ import scala.collection.mutable.ArrayBuffer
   * representative pairs (every minhash consumer) — each memoized per
   * (session, sf-dir) so one cached build serves every consumer, the
   * role a materialized staging table plays in a production pipeline.
+  * The fixture tables' footer schemas live here too, as kind
+  * `table.<name>` ([[Tables.schema]]): a build that caches no frame, so
+  * the same invalidate and stopped-session purge cover it.
   *
   * Before round 5 those memos were three private ConcurrentHashMaps in
   * two files, plus per-invocation `.cache()` calls that were never
   * unpersisted — exactly where a stale-cache bug would eventually live.
   * This object is the single home for all of them:
   *
-  *  - [[getOrBuild]] memoizes a build per (kind, session, dir) and
-  *    records every DataFrame the build cached (via [[CacheScope]]).
+  *  - [[getOrBuild]] memoizes a build per (kind, session, dir,
+  *    substrate) and records every DataFrame the build cached (via
+  *    [[CacheScope]]).
   *  - [[invalidate]] drops a dir's builds and unpersists their cached
   *    frames — the hook to call when the data under a dir changes.
   *  - Entries keyed by stopped sessions are purged on each access, so
@@ -26,8 +30,9 @@ import scala.collection.mutable.ArrayBuffer
   *    accumulates unreachable cached plans.
   *
   * Keys include the session so concurrent sessions never cross-share,
-  * and the dir so two corpora never cross-read (SharedBuildsSpec pins
-  * both properties).
+  * the dir so two corpora never cross-read, and the persist substrate
+  * so flipping the dial mid-session never serves a frame built under
+  * the other one (SharedBuildsSpec pins all three properties).
   */
 object SharedBuilds {
 
@@ -234,7 +239,8 @@ object SharedBuilds {
   private val defaultRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private final case class Key(kind: String, session: SparkSession, dir: String)
+  private final case class Key(kind: String, session: SparkSession, dir: String,
+      parquet: Boolean)
   private final case class Entry(value: AnyRef, frames: Seq[DataFrame],
       scratch: Option[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem)])
 
@@ -269,9 +275,10 @@ object SharedBuilds {
     evicted.foreach(d => remove(_.dir == d))
   }
 
-  /** The memoized value for (kind, session, dir), building it on first
-    * access; the value may be a DataFrame or any tuple of frames —
-    * callers cast back via the type parameter.
+  /** The memoized value for (kind, session, dir, substrate), building
+    * it on first access; the value may be a DataFrame, any tuple of
+    * frames or a plain value (a table schema) — callers cast back via
+    * the type parameter.
     *
     * The build runs OUTSIDE the map's bin lock — builds here NEST
     * (minhashReps' build reads sharedShingles, semDedup's reads the
@@ -291,10 +298,10 @@ object SharedBuilds {
       build: CacheScope => T): T = {
     purgeStopped()
     touchDir(dir)
-    val key = Key(kind, spark, dir)
+    val parquet = persistParquet(spark)
+    val key = Key(kind, spark, dir, parquet)
     val existing = memo.get(key)
     if (existing != null) return existing.value.asInstanceOf[T]
-    val parquet = persistParquet(spark)
     val scope =
       if (!parquet) new CacheScope(None)
       else {

@@ -206,20 +206,14 @@ object StreamingOps {
     // (symlink — no data copy).
     val streamDir = stagingDirs.computeIfAbsent(dir,
       stageSingleFile(_, "events.parquet", "events_stream", Some(spark)))
-    // memoized per dir: the probe costs a parquet footer read + relation
-    // resolution (~100 ms) and every drain rebuilds its stream DataFrame
-    // (4 executions × 14 event/doc drains per bench); the fixture's
-    // on-disk type is immutable for the JVM's life
-    val diskTsType = tsTypes.computeIfAbsent(dir,
-      d => graft.Tables.read(spark, d, "events").schema("ts").dataType)
+    // the footer schema Tables memoizes per (session, dir): every drain
+    // rebuilds its stream DataFrame, and the probe is a footer read
+    val diskTsType = graft.Tables.schema(spark, dir, "events")("ts").dataType
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = diskTsType) else f))
     graft.Tables.normalizeTs(
       streamReader(spark, schema).parquet(streamDir.toString))
   }
-
-  private val tsTypes =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
 
   private val splitDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()

@@ -184,6 +184,44 @@ class SharedBuildsSpec extends SparkSpec {
     }
   }
 
+  test("flipping the persist dial mid-session builds under the new substrate") {
+    // no invalidate() between the flips: the substrate is part of the
+    // memo key, so a frame built under one dial setting is never served
+    // under the other
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def scansFiles(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collect { case l: LogicalRelation => l }.nonEmpty
+    val scratch = java.nio.file.Files.createTempDirectory("spec-shared-scratch5")
+    var builds = 0
+    def get(): DataFrame =
+      SharedBuilds.getOrBuild[DataFrame]("spec.flip", spark, "/spec/flip") { scope =>
+        builds += 1
+        scope.cached(frame("flip"))
+      }
+    System.setProperty("graft.shared.persist", "cache")
+    System.setProperty("graft.shared.scratch", scratch.toString)
+    try {
+      val c = get()
+      c.count()
+      assert(builds == 1 && !scansFiles(c))
+      System.setProperty("graft.shared.persist", "parquet")
+      val p = get()
+      assert(builds == 2 && (p ne c), "the cache-mode frame was served under parquet")
+      assert(scansFiles(p))
+      assert(scratch.toFile.listFiles().exists(_.getName.startsWith("spec.flip-")))
+      assert(p.select("tag").head().getString(0) == "flip")
+      // and back: the cache-mode build is served again, never the parquet one
+      System.setProperty("graft.shared.persist", "cache")
+      assert(get() eq c)
+      assert(builds == 2)
+    } finally {
+      System.clearProperty("graft.shared.persist")
+      System.clearProperty("graft.shared.scratch")
+      SharedBuilds.invalidate("/spec/flip")
+      org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
+    }
+  }
+
   test("parquet persist mode: nested multi-frame builds round-trip exact values") {
     // the production shape (minhashReps reads sharedShingles) under the
     // scratch substrate: eager write-then-read must preserve values and

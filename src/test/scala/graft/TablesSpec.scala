@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types._
 
 /** Schema contract for the driver-generated fixture tables.
@@ -14,6 +16,9 @@ import org.apache.spark.sql.types._
   * the generations Tables.normalizeTs accepts (long nanos, native
   * timestamp, NTZ), but the NORMALIZED type exposed to the engine must
   * always be micros TimestampType.
+  *
+  * The read path is pinned too: the footer schema is inferred once per
+  * (session, dir, table), so a repeat read launches no Spark job.
   */
 class TablesSpec extends SparkSpec {
 
@@ -93,5 +98,70 @@ class TablesSpec extends SparkSpec {
     assert(Tables.normalizeTs(asNtz).head().getTimestamp(0) == expected)
     assert(Tables.normalizeTs(asLong).schema("ts").dataType == TimestampType)
     assert(Tables.normalizeTs(asNtz).schema("ts").dataType == TimestampType)
+  }
+
+  private val tables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Spark jobs this thread launches while `body` runs. A marker job
+    * closes the window: the listener bus delivers events in order, so
+    * once the marker's start arrives every earlier job's has too.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val prop = "graft.spec.jobWindow"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == s"$tag.end" => closed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      val out = body
+      sc.setLocalProperty(prop, s"$tag.end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a repeat read of every fixture table launches no job and keeps the footer schema") {
+    val first = tables.map(t => t -> Tables.read(spark, sf0001, t).schema).toMap
+    for (t <- tables) {
+      val (again, jobs) = jobsDuring(Tables.read(spark, sf0001, t).schema)
+      assert(jobs == 0, s"$t: a repeat read launched $jobs job(s) (schema inference)")
+      assert(again == first(t), s"$t: repeat read schema $again != ${first(t)}")
+      assert(again == spark.read.parquet(s"$sf0001/$t.parquet").schema,
+        s"$t: read schema differs from the footer's")
+    }
+  }
+
+  test("two reads of one table are distinct relations: a self-join resolves") {
+    val a = Tables.orders(spark, sf0001)
+    val b = Tables.orders(spark, sf0001)
+    val n = a.join(b, a("o_orderkey") === b("o_orderkey")).count()
+    val expected = a.groupBy("o_orderkey").count()
+      .agg(sum(col("count") * col("count"))).head().getLong(0)
+    assert(n > 0 && n == expected)
+  }
+
+  test("invalidate(dir) drops the memoized footer: the next read infers again") {
+    Tables.read(spark, sf0001, "region")
+    SharedBuilds.invalidate(sf0001)
+    val (_, inferred) = jobsDuring(Tables.read(spark, sf0001, "region"))
+    assert(inferred == 1, s"expected one inference job after invalidate, got $inferred")
+    val (_, again) = jobsDuring(Tables.read(spark, sf0001, "region"))
+    assert(again == 0)
   }
 }
